@@ -10,6 +10,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# spark.sql.shuffle.partitions is not here: it follows the session's
+# cores (get_spark: the N of local[N]; apply_session_tuning: the
+# session's defaultParallelism).  Streaming micro-batches run with AQE
+# off, so nothing coalesces the width: every batch opens and commits
+# one state store per partition per stateful operator, and partitions
+# beyond the core count only queue.  A running query keeps the width
+# recorded in its checkpoint's offset log.
+SHUFFLE_WIDTH = "spark.sql.shuffle.partitions"
+
 TUNED_CONF = {
     # AQE re-plans at runtime: coalesces shuffle partitions, converts
     # sort-merge joins to broadcast when a side turns out small, and
@@ -17,7 +26,6 @@ TUNED_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     # 128 MiB input splits: big enough to amortize task overhead,
@@ -49,10 +57,11 @@ if os.environ.get("SPARK_GRAFT_PERIODIC_GC"):
 
 
 def get_spark(app_name: str = "de-realtime-voting-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on, not the host's count
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     # JVM-launch conf (ignored by getOrCreate on a live session): the
-    # single local JVM is driver AND all 32 executor threads, so the
+    # single local JVM is driver AND every executor thread, so the
     # 1g default heap starves broadcast builds at the sf1 probe
     # point.  8g measured BEST for the bench sweep -- a 24g heap let
     # G1 accumulate GC debt across the 156-query sequence and several
@@ -67,7 +76,7 @@ def get_spark(app_name: str = "de-realtime-voting-spark") -> SparkSession:
         builder = builder.config(k, v)
     for k, v in TUNED_CONF.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return builder.config(SHUFFLE_WIDTH, cpus).getOrCreate()
 
 
 ROCKSDB_STATE_STORE = (
@@ -103,8 +112,10 @@ def enable_rocksdb_state_store(spark: SparkSession) -> SparkSession:
 
 def apply_session_tuning(spark: SparkSession) -> SparkSession:
     """Best-effort runtime tuning for an externally-created session
-    (e.g. the driver's); only touches runtime-settable confs."""
-    for k, v in TUNED_CONF.items():
+    (e.g. the driver's); only touches runtime-settable confs.  The
+    shuffle width becomes the session's defaultParallelism."""
+    conf = {**TUNED_CONF, SHUFFLE_WIDTH: str(spark.sparkContext.defaultParallelism)}
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -10,6 +10,8 @@ cell-budget precedent.  These tests pin both sides of the cutover.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from de_realtime_voting_spark import constants
@@ -45,6 +47,32 @@ def test_shuffle_width_tolerates_non_numeric_conf(spark):
     assert dedup._shuffle_width(spark) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+
+
+def test_shuffle_width_follows_session_cores(spark):
+    """The shuffle width is the session's core count, not a fixed
+    number: get_spark sets it to the N of local[N], and
+    apply_session_tuning resets any other width on an external session
+    to its defaultParallelism.  The repartition helper agrees with
+    both, and so does the width the streaming tools record per row."""
+    from de_realtime_voting_spark.session import apply_session_tuning
+    from tools.state_soak import session_width
+
+    key = "spark.sql.shuffle.partitions"
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    assert int(spark.conf.get(key)) == cores
+    assert dedup._shuffle_width(spark) == cores
+
+    parallelism = spark.sparkContext.defaultParallelism
+    assert session_width(spark) == {"cores": parallelism, "shuffle_partitions": cores}
+    try:
+        spark.conf.set(key, str(cores + 7))
+        assert dedup._shuffle_width(spark) == cores + 7
+        apply_session_tuning(spark)
+        assert int(spark.conf.get(key)) == parallelism
+        assert dedup._shuffle_width(spark) == parallelism
+    finally:
+        spark.conf.set(key, str(cores))
 
 
 def _two_doc_cross_bucket_corpus(spark):

@@ -25,6 +25,7 @@ from de_realtime_voting_spark.streaming import (
     stream_votes_per_candidate,
     stream_votes_per_candidate_hourly,
     to_kafka_frame,
+    watermark_votes,
 )
 
 
@@ -241,6 +242,66 @@ def test_checkpoint_recovery_resumes_state(spark, sf_dir, vote_json_dir):
     assert got == want
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_restart_keeps_checkpointed_shuffle_width(spark, vote_json_dir):
+    """A live tally checkpointed at one shuffle width restarts under a
+    session with another: Spark restores the width from the offset
+    log, so the state keeps its partitioning and the upserted tally
+    counts both deliveries exactly once."""
+    import glob
+
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    root = tempfile.mkdtemp(prefix="width_cp_")
+    src, ckpt, target = f"{root}/src", f"{root}/ckpt", f"{root}/tally"
+    os.makedirs(src)
+    files = sorted(glob.glob(f"{vote_json_dir}/part-*"))
+    assert len(files) >= 2
+
+    def run_once():
+        votes = watermark_votes(
+            parse_vote_stream(spark.readStream.text(src), "value")
+        )
+        q = (
+            stream_votes_per_candidate(votes)
+            .writeStream.outputMode("update")
+            .foreachBatch(
+                foreach_batch_upsert(
+                    target, ["candidate_id"], "total_votes", descending=True
+                )
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    try:
+        shutil.copy(files[0], src)
+        spark.conf.set(key, "32")
+        run_once()
+        spark.conf.set(key, width)
+        shutil.copy(files[1], src)  # new data arrives while "down"
+        run_once()
+
+        got = {
+            r["candidate_id"]: r["total_votes"]
+            for r in spark.read.parquet(target).collect()
+        }
+        want = {
+            r["candidate_id"]: r["total_votes"]
+            for r in voting.votes_per_candidate(
+                parse_vote_stream(spark.read.text(src), "value")
+            ).collect()
+        }
+        assert got == want and len(want) > 0
+        # one directory per state partition, next to Spark's _metadata
+        parts = [p for p in os.listdir(f"{ckpt}/state/0") if p.isdigit()]
+        assert sorted(map(int, parts)) == list(range(32))
+    finally:
+        spark.conf.set(key, width)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_stream_dedup_checkpoint_no_reemit(spark, sf_dir):

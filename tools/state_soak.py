@@ -334,6 +334,15 @@ def _pipelines():
     ]
 
 
+def session_width(spark) -> dict:
+    """The parallelism a row was measured at: the session's cores and
+    its shuffle width (one state store per shuffle partition)."""
+    return {
+        "cores": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
+
+
 def run_horizon_soak(spark, vote_schema) -> list[dict]:
     """Fixed-RATE soak of the stream-stream join over ~4x and ~8x the
     join horizon (within 30 min + 1 min delay + one ~15.3-min slice of
@@ -368,6 +377,7 @@ def run_horizon_soak(spark, vote_schema) -> list[dict]:
             "horizons": mult, "span_min": span, "input": volume,
             "rows": m["state_rows"], "peak": m["peak_rows"],
             "mem_bytes": m["memory_bytes"], "sst_bytes": m["sst_bytes"],
+            **session_width(spark),
         }
         print(f"horizon {mult}x: input={volume} rows={row['rows']} "
               f"peak={row['peak']} mem={row['mem_bytes']} "
@@ -452,7 +462,8 @@ def main() -> None:
     try:
         for name, domain, build, mode, bound, growth_cap, contract in specs:
             row = {"pipeline": name, "domain": domain, "bound_rows": bound,
-                   "growth_cap": growth_cap, "contract": contract}
+                   "growth_cap": growth_cap, "contract": contract,
+                   **session_width(spark)}
             for scale in (1, 10):
                 src, schema, vol = feeds[scale][domain]
                 m = run_stateful(spark, src, schema, build, mode)

@@ -19,6 +19,9 @@ Per run it records, from the query's own progress stream:
   * wall_s -- start->drain wall clock (includes scheduling overhead);
   * state_rows_final -- cross-check against STATE_AUDIT bounds.
 
+Each row also records the ``cores`` and ``shuffle_partitions`` (the
+number of state stores per stateful operator) it was measured at.
+
 Protocol: run ALONE on an idle machine (the SCALE.md rule); rates are
 single-shot and carry the documented small-run variance -- compare
 family-level shapes (does 10x volume hold rows/sec?), not single rows.
@@ -186,7 +189,8 @@ def main() -> None:
     rows = _load(dest)
     try:
         for name, domain, build, mode, family in specs:
-            row = {"pipeline": name, "domain": domain, "family": family}
+            row = {"pipeline": name, "domain": domain, "family": family,
+                   **soak.session_width(spark)}
             # codegen/JIT warmup: one discarded 1x drain per pipeline
             # so the timed rows measure steady state, not janino
             # compilation of the first batch (the bench.py convention;
